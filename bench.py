@@ -540,7 +540,9 @@ def main() -> None:
         "queries_calibrated": calibrated,
         "calibration_samples": cal_samples,
         "quiet_cal_sec": QUIET_CAL_SEC,
-        "cpus": os.cpu_count(),
+        # the session's effective local[$SPARK_GRAFT_CPUS] parallelism,
+        # not the host's core count
+        "cpus": spark.sparkContext.defaultParallelism,
         "repeats": repeats,
         # round-over-round comparability controls (VERDICT r3 #2):
         # a fixed in-memory workload isolates host-speed drift,

@@ -8,8 +8,11 @@ cleaning rules handle (FIXTURES.md §1) is injected deterministically by
 modular selectors on a unique bigint key. The identical derivation is
 expressed twice:
 
-- :func:`claims_raw` — Spark DataFrame builder (engine input)
-- :data:`ORACLE_CTE` — DuckDB SQL CTE prefix (oracle input)
+- :func:`claims_raw` — Spark DataFrame builder (engine input), and
+  :func:`silver_claims` — the engine's one silver transform,
+  :func:`lakeflow.transform.clean_claims`, applied to it
+- :data:`ORACLE_CTE` — DuckDB SQL CTE prefix (oracle input), raw and
+  silver written independently
 
 so every silver/gold query is hash-checkable end-to-end, cleaning
 included.
@@ -41,12 +44,20 @@ Determinism rules (both dialects MUST stay in lock-step):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from lakeflow import io, transform
 
 NOW_SQL = "TIMESTAMP '2026-01-01 00:00:00'"
 NOW_SPARK = "timestamp_ntz'2026-01-01 00:00:00'"
+
+# silver column order of the reference DDL
+# (/root/reference/jobs/silver/claims_to_iceberg.py:93-108)
+SILVER_COLS = (
+    "claim_id, member_id, provider_name, claim_amount, service_date, "
+    "service_year, service_month, service_day, claim_amount_category, "
+    "processing_timestamp, data_quality_score, ingestion_timestamp, "
+    "source_file, batch_id"
+)
 
 
 def claims_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -64,15 +75,12 @@ def claims_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _claims_raw_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch-constructed CASE ladders (r12, guide §7.3).
-
-    Semantics identical to :func:`_claims_raw_build_columns` (the
-    Column-API spec below, pinned row-for-row by
-    tests/test_plancache.py::test_fast_builders_match_column_spec): the
-    same expression text, but parsed JVM-side from TWO selectExpr
-    batches instead of built by hundreds of py4j Column calls — the
-    cold-path construction cost drops ~10× (the warm path was already
-    memoized in r11).
+    """Batch-constructed CASE ladders (r12, guide §7.3): the expression
+    text is parsed JVM-side from TWO selectExpr batches instead of built
+    by hundreds of py4j Column calls — the cold-path construction cost
+    drops ~10× (the warm path was already memoized in r11). Pinned
+    column-for-column against :data:`ORACLE_CTE`'s ``claims_raw`` by
+    tests/test_oracle_parity.py::test_claims_raw_matches_oracle.
     """
     li = io.read_table(spark, sf_dir, "lineitem")
     clm = "concat('CLM', lpad(CAST(key AS STRING), 20, '0'))"
@@ -118,81 +126,16 @@ def _claims_raw_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _claims_raw_build_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column-API spec of the raw-claims derivation — the readable form
-    the docstring at the top of this module describes, kept as the
-    equivalence-test reference for the batched builder above."""
-    li = io.read_table(spark, sf_dir, "lineitem")
-    cents0 = F.round(F.col("l_extendedprice") * 100).cast("bigint")
-    key0 = (F.col("l_orderkey") * 8 + F.col("l_linenumber")) * 1_000_000_000 + (
-        F.col("l_partkey") * 1009 + F.col("l_suppkey") * 9176 + cents0
-    ) % 1_000_000_000
-    df = li.select(
-        key0.alias("key"),
-        cents0.alias("cents"),
-        F.col("l_partkey"),
-        F.col("l_suppkey"),
-        F.expr("l_shipdate + INTERVAL 28 YEARS").alias("sd"),
-    )
-
-    key = F.col("key")
-    cents = F.col("cents")
-    base_provider = F.concat(F.lit("Clinic "), F.col("l_suppkey").cast("string"))
-    member = F.concat(F.lit("MBR"), (F.col("l_partkey") % 1000).cast("string"))
-    clm = F.concat(F.lit("CLM"), F.lpad(key.cast("string"), 20, "0"))
-    proc_ts = F.expr(
-        f"{NOW_SPARK} - make_interval(0, 0, 0, cast(key % 45 as int), 0, 0, 0)"
-    )
-
-    return df.select(
-        F.when(key % 101 == 0, F.lit(None).cast("string"))
-        .when(key % 97 == 0, F.concat(F.lit("  "), clm, F.lit(" ")))
-        .otherwise(clm)
-        .alias("claim_id"),
-        F.when(key % 37 == 0, F.lit(None).cast("string"))
-        .when(key % 41 == 0, F.concat(F.lit(" "), member, F.lit(" ")))
-        .otherwise(member)
-        .alias("member_id"),
-        F.when(key % 43 == 0, F.lit(None).cast("string"))
-        .when(key % 47 == 0, F.lit("   "))
-        .when(key % 3 == 0, F.lower(base_provider))
-        .when(key % 3 == 1, F.upper(base_provider))
-        .otherwise(base_provider)
-        .alias("provider_name"),
-        F.when(key % 29 == 0, F.lit(None).cast("double"))
-        .when(key % 31 == 0, -((cents % 5000 + 1).cast("double")))
-        .when(key % 5 == 0, F.lit(0.0))
-        .when(key % 5 == 1, (cents % 100 + 1).cast("double"))
-        .when(key % 5 == 2, (cents % 900 + 101).cast("double"))
-        .when(key % 5 == 3, (cents % 9000 + 1001).cast("double"))
-        .otherwise((cents % 90000 + 10001).cast("double"))
-        .alias("claim_amount"),
-        F.when(key % 53 == 0, F.lit("INVALID-DATE"))
-        .when(key % 3 == 0, F.date_format("sd", "yyyy-MM-dd"))
-        .when(key % 3 == 1, F.date_format("sd", "MM/dd/yyyy"))
-        .otherwise(F.date_format("sd", "dd/MM/yyyy"))
-        .alias("service_date"),
-        proc_ts.alias("processing_timestamp"),
-        F.expr(
-            f"{NOW_SPARK} - make_interval(0, 0, 0, cast(key % 45 as int), 1, 0, 0)"
-        ).alias("ingestion_timestamp"),
-        F.lit("csv").alias("source_file"),
-        F.date_format(proc_ts, "yyyyMMdd_HHmmss").alias("batch_id"),
-    )
-
-
 def silver_claims(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cleaned/enriched silver claims — the engine's silver transform
     (lakeflow.transform.clean_claims) applied to the derived raw table.
 
-    Column order matches the reference DDL
-    (/root/reference/jobs/silver/claims_to_iceberg.py:93-108).
+    Column order is :data:`SILVER_COLS`.
 
-    Plan-memoized per (session, sf_dir): constructing this chain costs
-    ~3,100 py4j round trips (~0.9 s driver wall, measured r11 — see
-    lakeflow.plancache). The memo returns the identical persisted
-    DataFrame every gold view previously re-built; the data-level
-    dedupe (CacheManager via persist) is unchanged.
+    Plan-memoized per (session, sf_dir) (see lakeflow.plancache): the
+    memo returns the identical persisted DataFrame every gold view
+    would otherwise re-build; the data-level dedupe (CacheManager via
+    persist) is unchanged.
     """
     from lakeflow.plancache import tier
 
@@ -201,78 +144,11 @@ def silver_claims(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _date_parse_branch(col: str, regex: str, ypos: int, mpos: int, dpos: int) -> str:
-    """SQL text of one compiled date-parse branch — the exact expression
-    :func:`lakeflow.transform._fast_date_parse` builds via the Column
-    API (regex gate → field-range guard → day-vs-month-length guard →
-    make_date), emitted as a string so the silver chain can be parsed in
-    one JVM batch."""
-    y = f"CAST(substring({col}, {ypos}, 4) AS INT)"
-    m = f"CAST(substring({col}, {mpos}, 2) AS INT)"
-    d = f"CAST(substring({col}, {dpos}, 2) AS INT)"
-    dim = f"dayofmonth(last_day(make_date({y}, {m}, 1)))"
-    return (
-        f"CASE WHEN {col} RLIKE '{regex}' THEN"
-        f" (CASE WHEN ({m} BETWEEN 1 AND 12) AND ({d} BETWEEN 1 AND 31) THEN"
-        f" (CASE WHEN {d} <= {dim} THEN make_date({y}, {m}, {d}) END)"
-        f" END) END"
-    )
-
-
 def _silver_claims_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch-constructed silver transform (r12, guide §7.3): the same
-    clean/parse/enrich/score chain as
-    :func:`transform.clean_claims`(:func:`claims_raw`) — pinned
-    row-for-row by tests/test_plancache.py — but parsed JVM-side from
-    two selectExpr batches instead of ~3,100 py4j round trips."""
-    parse = "coalesce({}, {}, {})".format(
-        _date_parse_branch("service_date", r"^\\d{4}-\\d{2}-\\d{2}$", 1, 6, 9),
-        _date_parse_branch("service_date", r"^\\d{2}/\\d{2}/\\d{4}$", 7, 1, 4),
-        _date_parse_branch("service_date", r"^\\d{2}/\\d{2}/\\d{4}$", 7, 4, 1),
-    )
-    df = (
-        claims_raw(spark, sf_dir)
-        .where("claim_id IS NOT NULL")
-        .selectExpr(
-            "trim(claim_id) AS claim_id",
-            "trim(member_id) AS member_id",
-            "CASE WHEN provider_name IS NULL OR trim(provider_name) = ''"
-            " THEN 'UNKNOWN' ELSE upper(trim(provider_name)) END AS provider_name",
-            "CASE WHEN claim_amount IS NULL OR claim_amount < 0"
-            " THEN 0.0D ELSE claim_amount END AS claim_amount",
-            f"{parse} AS service_date",
-            "processing_timestamp",
-            "ingestion_timestamp",
-            "source_file",
-            "batch_id",
-        )
-        .selectExpr(
-            "claim_id",
-            "member_id",
-            "provider_name",
-            "claim_amount",
-            "service_date",
-            "year(service_date) AS service_year",
-            "month(service_date) AS service_month",
-            "dayofmonth(service_date) AS service_day",
-            "CASE WHEN claim_amount = 0 THEN 'ZERO'"
-            " WHEN claim_amount <= 100.0D THEN 'LOW'"
-            " WHEN claim_amount <= 1000.0D THEN 'MEDIUM'"
-            " WHEN claim_amount <= 10000.0D THEN 'HIGH'"
-            " ELSE 'VERY_HIGH' END AS claim_amount_category",
-            "processing_timestamp",
-            "CASE WHEN claim_id IS NULL THEN 0.0D"
-            " WHEN member_id IS NULL THEN 0.3D"
-            " WHEN service_date IS NULL THEN 0.5D"
-            " WHEN claim_amount IS NULL OR claim_amount <= 0 THEN 0.7D"
-            " ELSE 1.0D END AS data_quality_score",
-            "ingestion_timestamp",
-            "source_file",
-            "batch_id",
-        )
-        # same gate as transform.clean_claims: filter the raw column, not
-        # the score CASE (see that function's pushdown note)
-        .where("member_id IS NOT NULL")
+    """:func:`transform.clean_claims` over :func:`claims_raw`, in the
+    reference DDL's column order, persisted."""
+    df = transform.clean_claims(claims_raw(spark, sf_dir)).selectExpr(
+        *SILVER_COLS.split(", ")
     )
     # Silver is a MATERIALIZED tier in the medallion model — the
     # reference stores it in Iceberg and every gold view reads the
@@ -285,33 +161,9 @@ def _silver_claims_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
-def _silver_claims_build_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Operator-composition spec of the silver tier (the r1–r11 shipped
-    form), kept as the equivalence-test reference for the batched
-    builder above. NOTE: un-persisted and un-memoized — build through
-    :func:`silver_claims` for real use."""
-    df = transform.clean_claims(_claims_raw_build_columns(spark, sf_dir))
-    df = df.select(
-        "claim_id",
-        "member_id",
-        "provider_name",
-        "claim_amount",
-        "service_date",
-        "service_year",
-        "service_month",
-        "service_day",
-        "claim_amount_category",
-        "processing_timestamp",
-        "data_quality_score",
-        "ingestion_timestamp",
-        "source_file",
-        "batch_id",
-    )
-    return df
-
-
 # ---------------------------------------------------------------------------
-# DuckDB oracle mirror — MUST stay in lock-step with the builders above.
+# DuckDB oracle mirror — MUST stay in lock-step with claims_raw and
+# transform.clean_claims.
 # ---------------------------------------------------------------------------
 
 ORACLE_CTE = """

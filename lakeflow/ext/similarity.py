@@ -1510,7 +1510,11 @@ def ann_recall(
     # pipeline for the 1-row count aggregate)
     gt = knn_bruteforce(spark, sf_dir, query_mod=query_mod).select(
         "q_id", "vec_id", F.lit(1).alias("hit")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    # an identical ground truth cached before this call (an earlier
+    # evaluation's) is not ours to release on the error path below
+    gt_shared = gt.storageLevel != StorageLevel.NONE
+    gt = gt.persist(StorageLevel.MEMORY_AND_DISK)
     # One coarse quantizer for the whole IVF family (r12): ivf, ivfpq
     # and ivfpq_hi all build the IDENTICAL deterministic
     # kmeans_centroids(emb, 8, 2) index + full-corpus inverted lists —
@@ -1530,16 +1534,6 @@ def ann_recall(
         lists = _nearest_lists(emb, cent, "v", 1).localCheckpoint(eager=False)
         return cent, lists
 
-    methods = [
-        ("ivf", lambda s, d, query_mod: knn_ivf(s, d, query_mod=query_mod, _coarse=coarse)),
-        ("ivfpq", lambda s, d, query_mod: knn_ivfpq(s, d, query_mod=query_mod, _coarse=coarse)),
-        # the deployment-resolution twin (ks=64/rerank=10/nprobe=6):
-        # with it in the battery, the deployment shape's recall is an
-        # oracle-certified number, not a SCALE.md probe measurement
-        ("ivfpq_hi", lambda s, d, query_mod: knn_ivfpq_hi(s, d, query_mod=query_mod, _coarse=coarse)),
-        ("lsh", knn_lsh),
-        ("sq8", knn_sq8),
-    ]
     # Build the five method pipelines CONCURRENTLY (r12, guide §2.6
     # "overlap independent jobs"): each eager index build (Lloyd
     # rounds, PQ codebooks, checkpoints) blocks the driver while the
@@ -1557,7 +1551,8 @@ def ann_recall(
     # plan-budget gate and churns the committed plan dump — not worth
     # it.) Results are unchanged — every build is deterministic and
     # shared-equals-recomputed; the union below consumes the futures
-    # in the fixed ``methods`` order.
+    # in the fixed ``methods`` order. A failed build releases the gt
+    # persist before re-raising.
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.util import inheritable_thread_target
@@ -1569,10 +1564,29 @@ def ann_recall(
             F.lit(name).alias("method"), "q_id", "vec_id"
         )
 
-    with ThreadPoolExecutor(max_workers=len(methods) + 1) as pool:
-        coarse_f = pool.submit(inheritable_thread_target(spark)(_coarse_build))
-        coarse = coarse_f.result  # pending build; workers resolve it
-        parts = list(pool.map(_build, methods))
+    try:
+        with ThreadPoolExecutor(max_workers=6) as pool:  # 5 methods + coarse
+            coarse_f = pool.submit(inheritable_thread_target(spark)(_coarse_build))
+            coarse = coarse_f.result  # pending build; workers resolve it
+            methods = [
+                ("ivf", lambda s, d, query_mod: knn_ivf(
+                    s, d, query_mod=query_mod, _coarse=coarse)),
+                ("ivfpq", lambda s, d, query_mod: knn_ivfpq(
+                    s, d, query_mod=query_mod, _coarse=coarse)),
+                # the deployment-resolution twin (ks=64/rerank=10/nprobe=6):
+                # with it in the battery, the deployment shape's recall is
+                # an oracle-certified number, not a SCALE.md probe
+                # measurement
+                ("ivfpq_hi", lambda s, d, query_mod: knn_ivfpq_hi(
+                    s, d, query_mod=query_mod, _coarse=coarse)),
+                ("lsh", knn_lsh),
+                ("sq8", knn_sq8),
+            ]
+            parts = list(pool.map(_build, methods))
+    except BaseException:
+        if not gt_shared:
+            gt.unpersist()
+        raise
     tagged = None
     for part in parts:
         tagged = part if tagged is None else tagged.unionByName(part)

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from lakeflow import claims, quality, relational, transform, views
 from lakeflow import io as lio
-from lakeflow.claims import NOW_SPARK, oracle
+from lakeflow.claims import NOW_SPARK, SILVER_COLS, oracle
 from lakeflow.ext import (
     bpe,
     curation,
@@ -40,13 +40,6 @@ from lakeflow.ext import (
 )
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-
-SILVER_COLS = (
-    "claim_id, member_id, provider_name, claim_amount, service_date, "
-    "service_year, service_month, service_day, claim_amount_category, "
-    "processing_timestamp, data_quality_score, ingestion_timestamp, "
-    "source_file, batch_id"
-)
 
 
 def _silver(fn: Callable[[DataFrame], DataFrame]) -> QueryFn:

@@ -1,167 +1,100 @@
-"""Silver-tier cleaning / enrichment operator builders.
+"""Silver-tier cleaning / enrichment operators.
 
-Generic, reusable plan builders (pure Catalyst expressions — no UDFs)
-whose composition reproduces the reference's silver transform exactly
-(/root/reference/jobs/silver/claims_to_iceberg.py:45-88):
+Each cleaning rule of the reference's silver transform
+(/root/reference/jobs/silver/claims_to_iceberg.py:45-88) is written once,
+as a SQL-text fragment:
 
     filter notnull → trim → default-fill → clamp → multi-format date
     parse → date parts → value banding → cascading quality score →
     threshold filter
 
-All date parsing uses ``try_to_date`` so the operators are safe under
-ANSI mode (Spark 4 default) — the reference ran Spark 3.4 where plain
+:func:`clean_claims_scored` parses the fragments JVM-side, one batch per
+projection layer, instead of building hundreds of Column objects over
+py4j (the cold construction cost drops ~5×). Pure Catalyst expressions —
+no UDFs, and no exception-driven parsing, so the rules are safe under
+ANSI mode (Spark 4 default); the reference ran Spark 3.4 where plain
 ``to_date`` already returned NULL on malformed input.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def not_null_filter(df: DataFrame, col: str) -> DataFrame:
-    """P2 — drop rows with a NULL key column
-    (claims_to_iceberg.py:51)."""
-    return df.filter(F.col(col).isNotNull())
+CLAIM_DATE_FORMATS = ("yyyy-MM-dd", "MM/dd/yyyy", "dd/MM/yyyy")
 
 
-def trim_columns(df: DataFrame, *cols: str) -> DataFrame:
-    """F1 — whitespace-trim string columns (claims_to_iceberg.py:52-53)."""
-    for c in cols:
-        df = df.withColumn(c, F.trim(F.col(c)))
-    return df
-
-
-def null_or_blank_to_default(
-    df: DataFrame, col: str, default: str, normalize_upper: bool = True
-) -> DataFrame:
+def _default_blank(col: str, default: str) -> str:
     """P3 — NULL/blank → default, else upper(trim)
     (claims_to_iceberg.py:54-56)."""
-    cleaned = F.upper(F.trim(F.col(col))) if normalize_upper else F.trim(F.col(col))
-    return df.withColumn(
-        col,
-        F.when(F.col(col).isNull() | (F.trim(F.col(col)) == ""), F.lit(default)).otherwise(
-            cleaned
-        ),
+    return (
+        f"CASE WHEN {col} IS NULL OR trim({col}) = '' THEN '{default}'"
+        f" ELSE upper(trim({col})) END"
     )
 
 
-def clamp_non_negative(df: DataFrame, col: str, fill: float = 0.0) -> DataFrame:
-    """P4 — NULL or negative numeric → fill (claims_to_iceberg.py:57-59)."""
-    return df.withColumn(
-        col,
-        F.when(F.col(col).isNull() | (F.col(col) < 0), F.lit(fill)).otherwise(F.col(col)),
-    )
+def _clamp(col: str) -> str:
+    """P4 — NULL or negative numeric → 0.0 (claims_to_iceberg.py:57-59)."""
+    return f"CASE WHEN {col} IS NULL OR {col} < 0 THEN 0.0D ELSE {col} END"
 
 
-def _fast_date_parse(c: Column, fmt: str) -> Column | None:
-    """Compile a simple yyyy/MM/dd-with-literal-separators format into
-    an exception-free parse expression; ``None`` if ``fmt`` is not of
-    that shape (caller falls back to try_to_date).
+def _fast_date_parse(col: str, fmt: str) -> str:
+    """SQL text of an exception-free parse of ``col`` under a
+    yyyy/MM/dd-shaped ``fmt`` (the three fields in any order, separated
+    by ``-`` or ``/``); ValueError on any other format.
 
     Why: ``try_to_date(c, fmt)`` is exception-driven — every
     non-matching row throws and catches a JVM DateTimeException
     internally, which dominates multi-format fallback chains (each row
     fails all formats before its own). The compiled form rejects
     non-matching rows with a regex and validates field ranges with
-    integer comparisons; ``try_make_date`` then only sees well-formed
-    candidates (its internal exception fires only for genuinely
-    impossible dates such as Feb 30 — none in a formatted-date feed).
-    Strictness matches try_to_date: exact width, no trimming.
+    integer comparisons; the day is checked arithmetically against the
+    month length, so ``make_date`` never sees an impossible date (this
+    build has no try_make_date routine). Strictness matches try_to_date:
+    exact width, no trimming.
     """
     tokens = re.findall(r"yyyy|MM|dd|.", fmt)
-    if len(tokens) != 5 or sorted(t for t in tokens if len(t) > 1) != ["MM", "dd", "yyyy"]:
-        return None
-    pos, regex, loc = 1, "^", {}
+    if (
+        len(tokens) != 5
+        or sorted(tokens[::2]) != ["MM", "dd", "yyyy"]
+        or not set(tokens[1::2]) <= {"-", "/"}
+    ):
+        raise ValueError(f"not a yyyy/MM/dd-shaped date format: {fmt!r}")
+    pos, regex, field = 1, "^", {}
     for t in tokens:
-        if t in ("yyyy", "MM", "dd"):
-            width = 4 if t == "yyyy" else 2
-            regex += rf"\d{{{width}}}"
-            loc[t] = (pos, width)
-            pos += width
+        width = {"yyyy": 4, "MM": 2, "dd": 2}.get(t, 1)
+        if width > 1:
+            regex += rf"\\d{{{width}}}"
+            field[t] = f"CAST(substring({col}, {pos}, {width}) AS INT)"
         else:
-            regex += re.escape(t)
-            pos += len(t)
-    regex += "$"
-    y = F.substring(c, *loc["yyyy"]).cast("int")
-    m = F.substring(c, *loc["MM"]).cast("int")
-    d = F.substring(c, *loc["dd"]).cast("int")
-    # day validity checked arithmetically (day <= dayofmonth(last_day))
-    # so make_date never sees an impossible date — no try_* needed, and
-    # safe under ANSI mode (this build has no try_make_date routine).
-    days_in_month = F.dayofmonth(F.last_day(F.make_date(y, m, F.lit(1))))
-    guarded = F.when(
-        m.between(1, 12) & d.between(1, 31),
-        F.when(d <= days_in_month, F.make_date(y, m, d)),
-    )
-    return F.when(c.rlike(regex), guarded)
-
-
-def parse_date_multi(df: DataFrame, col: str, formats: Sequence[str]) -> DataFrame:
-    """F4 — first-match multi-format date parse
-    (claims_to_iceberg.py:60-63). NULL-on-malformed semantics under
-    ANSI mode; simple formats compile to exception-free expressions
-    (see _fast_date_parse), others use ``try_to_date``."""
-    c = F.col(col)
-    branches = []
-    for fmt in formats:
-        fast = _fast_date_parse(c, fmt)
-        branches.append(fast if fast is not None else F.try_to_date(c, fmt))
-    return df.withColumn(col, F.coalesce(*branches))
-
-
-def add_date_parts(
-    df: DataFrame, src: str, year_col: str, month_col: str, day_col: str
-) -> DataFrame:
-    """F5 — derive (year, month, day) partition columns
-    (claims_to_iceberg.py:67-69). These become the physical partition
-    keys downstream (SURVEY.md §4 R3) so gold predicates prune."""
+            regex += t
+        pos += width
+    y, m, d = field["yyyy"], field["MM"], field["dd"]
     return (
-        df.withColumn(year_col, F.year(F.col(src)))
-        .withColumn(month_col, F.month(F.col(src)))
-        .withColumn(day_col, F.dayofmonth(F.col(src)))
+        f"CASE WHEN {col} RLIKE '{regex}$' THEN"
+        f" (CASE WHEN ({m} BETWEEN 1 AND 12) AND ({d} BETWEEN 1 AND 31) THEN"
+        f" (CASE WHEN {d} <= dayofmonth(last_day(make_date({y}, {m}, 1)))"
+        f" THEN make_date({y}, {m}, {d}) END)"
+        f" END) END"
     )
 
 
-def band_column(
-    df: DataFrame,
-    src: str,
-    dst: str,
-    bands: Sequence[tuple[float | None, str]],
-    zero_label: str | None = None,
-) -> DataFrame:
-    """P9 — CASE-ladder banding (claims_to_iceberg.py:70-75).
-
-    ``bands`` is an ordered list of (inclusive upper bound, label);
-    a ``None`` bound is the terminal otherwise-label.
-    """
-    expr: Column | None = None
-    if zero_label is not None:
-        expr = F.when(F.col(src) == 0, zero_label)
-    otherwise = None
-    for bound, label in bands:
-        if bound is None:
-            otherwise = label
-            continue
-        cond = F.col(src) <= F.lit(bound)
-        expr = F.when(cond, label) if expr is None else expr.when(cond, label)
-    assert expr is not None and otherwise is not None
-    return df.withColumn(dst, expr.otherwise(otherwise))
+def not_null_filter(df: DataFrame, col: str) -> DataFrame:
+    """P2 — drop rows with a NULL key column
+    (claims_to_iceberg.py:51)."""
+    return df.where(f"{col} IS NOT NULL")
 
 
-def cascade_score(
-    df: DataFrame, dst: str, rules: Sequence[tuple[Column, float]], default: float
-) -> DataFrame:
-    """P10 — cascading CASE quality score (claims_to_iceberg.py:77-82).
-    First matching rule wins."""
-    expr: Column | None = None
-    for cond, score in rules:
-        expr = F.when(cond, F.lit(score)) if expr is None else expr.when(cond, F.lit(score))
-    assert expr is not None
-    return df.withColumn(dst, expr.otherwise(F.lit(default)))
+def null_or_blank_to_default(df: DataFrame, col: str, default: str) -> DataFrame:
+    """P3 as an operator (see :func:`_default_blank`)."""
+    return df.withColumn(col, F.expr(_default_blank(col, default)))
+
+
+def clamp_non_negative(df: DataFrame, col: str) -> DataFrame:
+    """P4 as an operator (see :func:`_clamp`)."""
+    return df.withColumn(col, F.expr(_clamp(col)))
 
 
 def threshold_filter(df: DataFrame, col: str, minimum: float) -> DataFrame:
@@ -169,56 +102,63 @@ def threshold_filter(df: DataFrame, col: str, minimum: float) -> DataFrame:
     return df.filter(F.col(col) >= F.lit(minimum))
 
 
-CLAIM_DATE_FORMATS = ("yyyy-MM-dd", "MM/dd/yyyy", "dd/MM/yyyy")
-
-CLAIM_AMOUNT_BANDS: tuple[tuple[float | None, str], ...] = (
-    (100.0, "LOW"),
-    (1000.0, "MEDIUM"),
-    (10000.0, "HIGH"),
-    (None, "VERY_HIGH"),
-)
-
-
 def clean_claims_scored(df: DataFrame) -> DataFrame:
     """The silver transform up to (and including) the quality score,
-    WITHOUT the final quality gate — the shared ladder both
+    WITHOUT the final quality gate — the shared chain both
     ``clean_claims`` and the gate-equivalence test build on, so the
-    proof can never drift from the shipped chain.
+    proof can never drift from the shipped transform.
 
     Input columns: claim_id, member_id, provider_name, claim_amount,
-    service_date (string) (+ passthrough lineage columns).
+    service_date (string) (+ passthrough lineage columns, kept in
+    place). Each layer is one ``withColumns`` batch of rule texts: the
+    cleaned columns replace their inputs in place, the derived ones are
+    appended (or replace a same-named input).
     """
-    df = not_null_filter(df, "claim_id")
-    df = trim_columns(df, "claim_id", "member_id")
-    df = null_or_blank_to_default(df, "provider_name", "UNKNOWN")
-    df = clamp_non_negative(df, "claim_amount", 0.0)
-    df = parse_date_multi(df, "service_date", CLAIM_DATE_FORMATS)
-    df = add_date_parts(df, "service_date", "service_year", "service_month", "service_day")
-    df = band_column(
-        df, "claim_amount", "claim_amount_category", CLAIM_AMOUNT_BANDS, zero_label="ZERO"
+    parse = ", ".join(_fast_date_parse("service_date", f) for f in CLAIM_DATE_FORMATS)
+    clean = {
+        # F1 trim (claims_to_iceberg.py:52-53)
+        "claim_id": "trim(claim_id)",
+        "member_id": "trim(member_id)",
+        "provider_name": _default_blank("provider_name", "UNKNOWN"),
+        "claim_amount": _clamp("claim_amount"),
+        # F4 first-match multi-format date parse (claims_to_iceberg.py:60-63)
+        "service_date": f"coalesce({parse})",
+    }
+    enrich = {
+        # F5 date parts (claims_to_iceberg.py:67-69) — the physical
+        # partition keys downstream (SURVEY.md §4 R3), so gold predicates
+        # prune
+        "service_year": "year(service_date)",
+        "service_month": "month(service_date)",
+        "service_day": "dayofmonth(service_date)",
+        # P9 CASE-ladder banding (claims_to_iceberg.py:70-75)
+        "claim_amount_category": "CASE WHEN claim_amount = 0 THEN 'ZERO'"
+        " WHEN claim_amount <= 100.0D THEN 'LOW'"
+        " WHEN claim_amount <= 1000.0D THEN 'MEDIUM'"
+        " WHEN claim_amount <= 10000.0D THEN 'HIGH'"
+        " ELSE 'VERY_HIGH' END",
+        # P10 cascading quality score, first matching rule wins
+        # (claims_to_iceberg.py:77-82)
+        "data_quality_score": "CASE WHEN claim_id IS NULL THEN 0.0D"
+        " WHEN member_id IS NULL THEN 0.3D"
+        " WHEN service_date IS NULL THEN 0.5D"
+        " WHEN claim_amount IS NULL OR claim_amount <= 0 THEN 0.7D"
+        " ELSE 1.0D END",
+    }
+    return (
+        not_null_filter(df, "claim_id")
+        .withColumns({c: F.expr(e) for c, e in clean.items()})
+        .withColumns({c: F.expr(e) for c, e in enrich.items()})
     )
-    df = cascade_score(
-        df,
-        "data_quality_score",
-        [
-            (F.col("claim_id").isNull(), 0.0),
-            (F.col("member_id").isNull(), 0.3),
-            (F.col("service_date").isNull(), 0.5),
-            (F.col("claim_amount").isNull() | (F.col("claim_amount") <= 0), 0.7),
-        ],
-        default=1.0,
-    )
-    return df
 
 
 def clean_claims(df: DataFrame) -> DataFrame:
     """Full silver transform — exact semantics of
     /root/reference/jobs/silver/claims_to_iceberg.py:45-88."""
-    df = clean_claims_scored(df)
     # The reference gate is threshold_filter(score >= 0.5)
     # (claims_to_iceberg.py:85). Under this rule ladder that predicate
     # is EXACTLY member_id IS NOT NULL: the only sub-0.5 scores are 0.0
-    # (claim_id NULL — impossible after not_null_filter above) and 0.3
+    # (claim_id NULL — impossible after the claim_id filter) and 0.3
     # (member_id NULL); every other rung (0.5/0.7/1.0) passes. Filtering
     # on the raw column matters because PushDownPredicates would
     # otherwise substitute the whole score CASE — including the
@@ -227,5 +167,4 @@ def clean_claims(df: DataFrame) -> DataFrame:
     # derivation twice (a measured ~45 KB Filter expression; ~2× the
     # silver materialization cost). tests/test_transform.py proves the
     # two filters select identical rows.
-    df = not_null_filter(df, "member_id")
-    return df
+    return not_null_filter(clean_claims_scored(df), "member_id")

@@ -42,7 +42,7 @@ def test_fast_parse_matches_try_to_date_chain(spark_global, strings):
     spark = spark_global
     df = spark.createDataFrame([(s,) for s in strings], "s string")
     c = F.col("s")
-    fast = F.coalesce(*[_fast_date_parse(c, f) for f in CLAIM_DATE_FORMATS])
+    fast = F.coalesce(*[F.expr(_fast_date_parse("s", f)) for f in CLAIM_DATE_FORMATS])
     slow = F.coalesce(*[F.try_to_date(c, f) for f in CLAIM_DATE_FORMATS])
     # compare JVM-side (null-safe equality) and collect only the input
     # STRINGS of any mismatches: both chains parse proleptic year-0
@@ -69,3 +69,9 @@ import pytest
 @pytest.fixture(scope="module")
 def spark_global(spark):
     return spark
+
+
+@pytest.mark.parametrize("fmt", ["yyyyMMdd", "dd.MM.yyyy", "yyyy-MM-dd HH", "MM/dd/yy"])
+def test_fast_parse_rejects_other_formats(fmt):
+    with pytest.raises(ValueError):
+        _fast_date_parse("s", fmt)

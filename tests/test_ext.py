@@ -1482,6 +1482,40 @@ def test_ann_recall_invariants(spark, sf_dir):
     assert by["ivfpq_hi"].recall_at_k >= by["ivfpq"].recall_at_k
 
 
+def test_ann_recall_failed_build_releases_cache(spark, sf_dir, monkeypatch):
+    """A method build that raises must leave the session's cache as it
+    found it: a ground truth the call persisted is released, one cached
+    before the call (an earlier evaluation's) stays. (The shared io
+    fan-out read of the embeddings table is a session tier, made before
+    counting.)"""
+    from pyspark import StorageLevel
+
+    from lakeflow.ext import similarity as sim
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected build failure")
+
+    monkeypatch.setattr(sim, "knn_lsh", boom)
+    sim.io.read_table(spark, sf_dir, "embeddings")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    gt = sim.knn_bruteforce(spark, sf_dir).select("q_id", "vec_id", F.lit(1).alias("hit"))
+
+    def fail_and_compare():
+        before = (cache.numCachedEntries(), gt.storageLevel)
+        with pytest.raises(RuntimeError, match="injected build failure"):
+            sim.ann_recall(spark, sf_dir)
+        assert (cache.numCachedEntries(), gt.storageLevel) == before
+
+    fail_and_compare()  # the session's state as found
+    was_cached = gt.storageLevel != StorageLevel.NONE
+    gt.persist()
+    try:
+        fail_and_compare()  # ground truth cached by the caller
+    finally:
+        if not was_cached:
+            gt.unpersist()
+
+
 def test_coarse_callable_matches_tuple(spark, sf_dir):
     """A pending coarse build handed to the IVF family as a zero-arg
     callable (ann_recall's concurrent-build form, r12) must yield

@@ -4,8 +4,9 @@ scale factor — the local twin of the driver's CORRECTNESS gate."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import types as T
 
-from lakeflow import registry
+from lakeflow import claims, registry
 from tests.oracle_harness import compare, duck_connection
 
 ORACLED = sorted(name for name, (_, sql) in registry.ALL_QUERIES.items() if sql)
@@ -31,3 +32,36 @@ def test_rows_only_runs(spark, sf_dir, name):
     df = fn(spark, sf_dir)
     assert df.count() >= 0
     assert len(df.schema) > 0
+
+
+def test_claims_raw_matches_oracle(spark, sf_dir, duck):
+    """Every column of the derived raw claims (the dirty input the
+    silver transform cleans) against ORACLE_CTE's independent
+    derivation — no registry query selects them all."""
+    compare(
+        claims.claims_raw(spark, sf_dir),
+        duck,
+        claims.oracle("SELECT * FROM claims_raw"),
+        "claims_raw",
+    )
+
+
+def test_silver_schema_pinned(spark, sf_dir):
+    """The silver tier's column order and Spark types, literally (the
+    oracle comparison sorts columns and normalizes values)."""
+    assert [(f.name, f.dataType) for f in claims.silver_claims(spark, sf_dir).schema] == [
+        ("claim_id", T.StringType()),
+        ("member_id", T.StringType()),
+        ("provider_name", T.StringType()),
+        ("claim_amount", T.DoubleType()),
+        ("service_date", T.DateType()),
+        ("service_year", T.IntegerType()),
+        ("service_month", T.IntegerType()),
+        ("service_day", T.IntegerType()),
+        ("claim_amount_category", T.StringType()),
+        ("processing_timestamp", T.TimestampNTZType()),
+        ("data_quality_score", T.DoubleType()),
+        ("ingestion_timestamp", T.TimestampNTZType()),
+        ("source_file", T.StringType()),
+        ("batch_id", T.StringType()),
+    ]

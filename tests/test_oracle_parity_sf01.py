@@ -33,6 +33,9 @@ pytestmark = pytest.mark.skipif(
 # banding parameters keyed on corpus size, iterative argmax loops,
 # float accumulation over 10× the rows, int arithmetic near overflow
 HEAVY = [
+    # silver transform: all 14 columns, the compiled date parse and the
+    # quality gate over 10× the dirty-data cases
+    "q_silver_pipeline",
     # dedup family
     "q_dedup_exact",
     "q_dedup_near",
